@@ -4,9 +4,9 @@
     tune from history → run stop-word word count → overwrite sink →
     record this run's metrics
 
-Unified entry point (the reference split local/cluster into two Apps
-where only the local one tuned; ``tune=False`` reproduces the cluster
-path's behavior). Divergences from the reference, on purpose:
+One tuned lifecycle (``tuner.recommend.tuned_run``) for every run; the
+reference split local/cluster into two Apps where only the local one
+tuned. Divergences from the reference, on purpose:
 - args are (input, output, metrics_dir) — the reference read its
   metrics dir from ``args(3)`` leaving position 2 dead
   (CountingApp.scala:19-36); we don't reproduce the off-by-one.
@@ -19,53 +19,28 @@ Usage:  python -m robin_sparkles_spark.app INPUT OUTPUT [METRICS_DIR]
 
 from __future__ import annotations
 
-import logging
 import sys
 
 from pyspark.sql import SparkSession
 
-from .metrics.collector import current_max_stage_id
-from .metrics.store import MetricsStore
 from .operators.wordcount import with_stop_words_filtered
 from .session import get_spark
 from .sources.tables import read_text
-from .tuner.recommend import apply_recommendation, recommend_partitions, record_run
-
-log = logging.getLogger(__name__)
+from .tuner.recommend import tuned_run
 
 APP_NAME = "my_awesome_app"  # reference parity: CountingApp.scala:40
 
 
 def run_counting_app(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    metrics_dir: str,
-    tune: bool = True,
+    spark: SparkSession, input_path: str, output_path: str, metrics_dir: str
 ) -> int:
     """Run one tuned word-count pass; returns the partition count used."""
-    store = MetricsStore(spark, metrics_dir, APP_NAME)
-    if tune:
-        rec = recommend_partitions(store)
-        apply_recommendation(spark, rec)
-        run_id = rec.next_run_id
-        partitions = rec.partitions
-    else:
-        # cluster path in the reference: no tuning, always record run 0
-        # (CountingApp.scala:52-57)
-        run_id = 0
-        partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    # Recording window: only the workload's stages (not the tuner's
-    # store-read bookkeeping above) belong to this run — J2's
-    # positional alignment across runs depends on it.
-    since = current_max_stage_id(spark)
-    counts = with_stop_words_filtered(read_text(spark, input_path))
-    counts.write.mode("overwrite").parquet(output_path)
+    def job(s: SparkSession) -> None:
+        counts = with_stop_words_filtered(read_text(s, input_path))
+        counts.write.mode("overwrite").parquet(output_path)
 
-    if not record_run(store, run_id, since_stage_id=since):
-        log.warning("run %s not recorded; tuner history will not grow", run_id)
-    return partitions
+    return tuned_run(spark, metrics_dir, APP_NAME, job).partitions
 
 
 def main(argv: list[str]) -> int:

@@ -103,12 +103,20 @@ def barrier(
     # no-ops for this process — lets the cold-protocol probe measure a
     # site with and without its materialization job from identical
     # code. Results are unchanged either way (a barrier only controls
-    # recomputation, never values); not a production knob.
+    # recomputation, never values); not a production knob. Skipping a
+    # corpus barrier that SPARK_GRAFT_BARRIER_DIR would stage is refused:
+    # it would silently drop the staging the deployment asked for.
     skip = os.environ.get("SPARK_GRAFT_BARRIER_SKIP", "")
+    stage_dir = os.environ.get("SPARK_GRAFT_BARRIER_DIR")
     if skip and any(s and s in note for s in skip.split(",")):
+        if bound == "corpus" and stage_dir:
+            raise ValueError(
+                f"SPARK_GRAFT_BARRIER_SKIP={skip!r} skips corpus barrier "
+                f"{note!r}, which SPARK_GRAFT_BARRIER_DIR={stage_dir!r} "
+                "stages; unset one of the two"
+            )
         return df
     if bound == "corpus":
-        stage_dir = os.environ.get("SPARK_GRAFT_BARRIER_DIR")
         if stage_dir and not eager:
             log.warning(
                 "corpus barrier %r is lazy (eager=False) — staging to "

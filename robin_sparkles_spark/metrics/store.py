@@ -8,22 +8,24 @@ subpaths (Listener.scala:28-42).
 Semantics preserved:
 - run history is the *contiguous prefix* 0..N: the reference loads
   runs lazily until the first missing/corrupt one truncates history
-  (CountingApp.scala:65-68, Listener.scala:68-74). With Hive partition
-  discovery we read everything and cut the prefix in one pass.
-- a stage with no tasks disappears from the summary (inner join) —
-  the reference instead crashed the whole run load on the unguarded
-  ``taskMap(k)`` lookup (Listener.scala:66); documented divergence.
+  (CountingApp.scala:65-68, Listener.scala:68-74). A run missing
+  either table counts as missing.
+- a stage with no tasks disappears from the history — the reference
+  instead crashed the whole run load on the unguarded ``taskMap(k)``
+  lookup (Listener.scala:66); documented divergence.
 
-Scale: reads/writes are plain partitioned parquet; the stage↔task join
-runs distributed and only the per-stage summary (a few rows per run)
-ever reaches the driver.
+Scale: one row per stage and per task of each recorded run, never per
+record of data. The history is read the way the reference loads it
+(Listener.scala:59-75): each table is scanned once with its fixed
+schema (no inference job) and collected, and the stage↔task join (J1)
+plus the per-stage task aggregates run on the driver over those rows.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..tuner.heuristics import ShuffleSize, StageInfo
 from .schema import STAGE_METRICS_SCHEMA, TASK_METRICS_SCHEMA
@@ -47,7 +49,7 @@ class MetricsStore:
     # -- write (S5) ----------------------------------------------------------
     def write_run(self, run: int, stage_rows: list[dict], task_rows: list[dict]) -> None:
         """Persist one run's metrics. Rows come from the collector
-        (driver-side listener/REST data — inherently small: one row per
+        (driver-side REST/event-log data — inherently small: one row per
         stage/task, not per record). ``app_id`` (stamped by the
         collector) records which Spark application produced each run —
         stage ids restart per app, so cross-run stage comparisons are
@@ -70,14 +72,11 @@ class MetricsStore:
 
     # -- read (S6, S7) -------------------------------------------------------
     def _read(self, path: str, schema) -> DataFrame:
-        if not self._exists(path):
-            return self.spark.createDataFrame([], schema=schema)
-        return self.spark.read.parquet(path)
-
-    def _exists(self, path: str) -> bool:
         # Local fs check is fine here; on HDFS/S3 the parquet reader's
-        # own discovery handles it (read wrapped in try at call sites).
-        return os.path.exists(path)
+        # own discovery handles it.
+        if not os.path.exists(path):
+            return self.spark.createDataFrame([], schema=schema)
+        return self.spark.read.schema(schema).parquet(path)
 
     def stage_metrics(self) -> DataFrame:
         return self._read(self.stage_path, STAGE_METRICS_SCHEMA)
@@ -85,92 +84,47 @@ class MetricsStore:
     def task_metrics(self) -> DataFrame:
         return self._read(self.task_path, TASK_METRICS_SCHEMA)
 
-    def available_runs(self) -> list[int]:
-        """Distinct runs present in BOTH tables (a run missing either
-        half is corrupt, mirroring getRunInfo's any-exception→None,
-        Listener.scala:68-74)."""
-        s = {r.run for r in self.stage_metrics().select("run").distinct().collect()}
-        t = {r.run for r in self.task_metrics().select("run").distinct().collect()}
-        return sorted(s & t)
-
-    def contiguous_runs(self) -> list[int]:
-        """S7: the contiguous prefix 0,1,2,… — a gap truncates history
-        exactly like Stream.takeWhile (CountingApp.scala:65-68)."""
-        runs = []
-        present = set(self.available_runs())
-        n = 0
-        while n in present:
-            runs.append(n)
-            n += 1
-        return runs
-
-    # -- summarize (J1 + A2–A4) ----------------------------------------------
-    def stage_summary(self) -> DataFrame:
-        """The tuner's IR as a DataFrame: stage↔task equi-join on
-        (run, stage_id) + per-stage task aggregates
-        (Listener.scala:59-75 → StageInfo.apply,
-        ComputePartitions.scala:38-50).
-
-        Columns: run, stage_id, executor_cpu_time_ms, stage_duration_ms,
-        total_input_size_mb, num_executors, shuffle_bytes_written,
-        shuffle_bytes_read, total_task_time_ms, num_partitions_used.
-        """
-        task_agg = (
-            self.task_metrics()
-            .groupBy("run", "stage_id")
-            .agg(
-                F.sum("duration_ms").alias("total_task_time_ms"),  # A2
-                F.count("*").alias("num_partitions_used"),  # A3
-                F.countDistinct("executor_id").alias("num_executors"),  # A4
-            )
-        )
-        return (
-            self.stage_metrics()
-            .join(task_agg, ["run", "stage_id"], "inner")  # J1
-            .withColumn(
-                "total_input_size_mb", F.col("bytes_read") / F.lit(1024.0 * 1024.0)
-            )  # A7
-        )
-
     def run_history(self) -> list[list[StageInfo]]:
-        """Materialize the contiguous-prefix run history as StageInfo
-        lists ordered by stage_id — the driver-side hand-off to the
-        heuristics. Only the per-stage summary rows are collected."""
-        runs = self.contiguous_runs()
-        if not runs:
+        """The tuner's input: the contiguous-prefix run history (S7) as
+        StageInfo lists ordered by stage_id, one list per run.
+
+        One scan per table; everything after is driver-side over the
+        collected rows: the prefix cut (a gap truncates history like
+        Stream.takeWhile, CountingApp.scala:65-68), the stage↔task
+        equi-join on (run, stage_id) (J1) and the per-stage task
+        aggregates A2–A4 (Listener.scala:59-75 → StageInfo.apply,
+        ComputePartitions.scala:38-50)."""
+        stage_rows = self.stage_metrics().collect()
+        if not stage_rows:
             return []
-        rows = self.stage_summary().where(F.col("run").isin(runs)).collect()
-        task_rows = (
-            self.task_metrics()
-            .where(F.col("run").isin(runs))
-            .select("run", "stage_id", "duration_ms")
-            .collect()
-        )
         durations: dict[tuple[int, int], list[int]] = {}
-        for r in task_rows:
-            durations.setdefault((r.run, r.stage_id), []).append(r.duration_ms)
-        by_run: dict[int, list] = {n: [] for n in runs}
-        for row in rows:
-            by_run[row.run].append(row)
-        history = []
-        for n in runs:
-            stages = sorted(by_run[n], key=lambda r: r.stage_id)
-            history.append(
-                [
-                    StageInfo(
-                        executor_cpu_time_ms=row.executor_cpu_time_ms,
-                        stage_time_ms=row.stage_duration_ms,
-                        total_input_size_mb=row.total_input_size_mb,
-                        num_executors=row.num_executors,
-                        shuffle=ShuffleSize(
-                            bytes_written=row.shuffle_bytes_written,
-                            bytes_read=row.shuffle_bytes_read,
-                        ),
-                        task_durations_ms=tuple(
-                            durations.get((row.run, row.stage_id), ())
-                        ),
-                    )
-                    for row in stages
-                ]
+        executors: dict[tuple[int, int], set[str]] = {}
+        for t in self.task_metrics().collect():
+            key = (t.run, t.stage_id)
+            durations.setdefault(key, []).append(t.duration_ms)
+            executors.setdefault(key, set()).add(t.executor_id)
+
+        present = {r.run for r in stage_rows} & {run for run, _ in durations}
+        n_runs = 0
+        while n_runs in present:
+            n_runs += 1
+        history: list[list[StageInfo]] = [[] for _ in range(n_runs)]
+        for r in sorted(stage_rows, key=lambda r: (r.run, r.stage_id)):
+            key = (r.run, r.stage_id)
+            if r.run >= n_runs or key not in durations:
+                continue  # past the prefix, or a taskless stage
+            history[r.run].append(
+                StageInfo(
+                    executor_cpu_time_ms=r.executor_cpu_time_ms,
+                    stage_time_ms=r.stage_duration_ms,
+                    total_input_size_mb=r.bytes_read / (1024.0 * 1024.0),  # A7
+                    num_executors=len(executors[key]),
+                    shuffle=ShuffleSize(
+                        bytes_written=r.shuffle_bytes_written,
+                        bytes_read=r.shuffle_bytes_read,
+                    ),
+                    task_durations_ms=tuple(durations[key]),
+                    stage_id=r.stage_id,
+                )
             )
         return history

@@ -18,11 +18,16 @@ from __future__ import annotations
 import logging
 from dataclasses import dataclass
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 from ..metrics.collector import collect_app_metrics, current_max_stage_id
 from ..metrics.store import MetricsStore
-from .heuristics import ComputePartitions, ConfView, stages_with_most_expensive_shuffle
+from .heuristics import (
+    ComputePartitions,
+    ConfView,
+    StageInfo,
+    stages_with_most_expensive_shuffle,
+)
 
 log = logging.getLogger(__name__)
 
@@ -35,12 +40,18 @@ class Recommendation:
 
 
 def recommend_partitions(store: MetricsStore, conf: ConfView | None = None) -> Recommendation:
-    """The getOptimizedConf core: contiguous run history → max-shuffle
-    stage lineage (J2) → H8. Returns the partition count plus the id
-    the next recording should use (== number of previous runs,
-    CountingApp.scala:80-83)."""
-    conf = conf or ConfView.from_spark(store.spark)
-    history = store.run_history()
+    """The getOptimizedConf core over the store's run history."""
+    return partitions_from_history(
+        store.run_history(), conf or ConfView.from_spark(store.spark)
+    )
+
+
+def partitions_from_history(
+    history: list[list[StageInfo]], conf: ConfView
+) -> Recommendation:
+    """Contiguous run history → max-shuffle stage lineage (J2) → H8.
+    Returns the partition count plus the id the next recording should
+    use (== number of previous runs, CountingApp.scala:80-83)."""
     target_stages = stages_with_most_expensive_shuffle(history)
     partitions = ComputePartitions(conf).from_stage_metric_shared_cluster(target_stages)
     return Recommendation(
@@ -79,39 +90,32 @@ class BroadcastRecommendation:
 
 
 def recommend_broadcast_threshold(
-    store: MetricsStore, cap_bytes: int = BROADCAST_CAP_BYTES
+    history: list[list[StageInfo]], cap_bytes: int = BROADCAST_CAP_BYTES
 ) -> BroadcastRecommendation:
     """Pick the broadcast threshold from the LAST recorded run: among
-    stages with ``bytes_read > 0`` and ``shuffle_bytes_written > 0``
-    (file-scan map stages feeding an exchange — the shuffled join
-    sides; pure-exchange stages like a post-agg shuffle read no file
-    input and are excluded), take the smallest ``bytes_read`` as the
-    observed build side. Recommend the next power of two above
-    ``BROADCAST_HEADROOM ×`` that size (compressed-scan → plan
-    size-estimate slop), floored at 4 KiB; recommend nothing when no
-    such stage exists or the build side exceeds ``cap_bytes``."""
-    runs = store.contiguous_runs()
-    if not runs:
+    stages that read input and wrote shuffle (file-scan map stages
+    feeding an exchange — the shuffled join sides; pure-exchange stages
+    like a post-agg shuffle read no file input and are excluded), take
+    the smallest input as the observed build side. Recommend the next
+    power of two above ``BROADCAST_HEADROOM ×`` that size
+    (compressed-scan → plan size-estimate slop), floored at 4 KiB;
+    recommend nothing when no such stage exists or the build side
+    exceeds ``cap_bytes``."""
+    if not history:
         return BroadcastRecommendation(-1, 0, 0)
-    last = runs[-1]
-    rows = (
-        store.stage_summary()
-        .where(
-            (F.col("run") == last)
-            & (F.col("bytes_read") > 0)
-            & (F.col("shuffle_bytes_written") > 0)
-        )
-        .agg(F.min("bytes_read").alias("build"))
-        .collect()
-    )
-    build = rows[0]["build"]
+    # bytes = MB × 2**20 is exact: the MB figure is bytes / 2**20 and
+    # byte counts stay far below 2**53
+    sides = [
+        int(s.total_input_size_mb * (1 << 20))
+        for s in history[-1]
+        if s.total_input_size_mb > 0 and s.shuffle.bytes_written > 0
+    ]
+    build = min(sides, default=None)
     if build is None or build > cap_bytes:
-        return BroadcastRecommendation(-1, int(build or 0), len(runs))
-    threshold = max(BROADCAST_FLOOR_BYTES, BROADCAST_HEADROOM * int(build))
+        return BroadcastRecommendation(-1, build or 0, len(history))
+    threshold = max(BROADCAST_FLOOR_BYTES, BROADCAST_HEADROOM * build)
     threshold = 1 << (threshold - 1).bit_length()  # next power of two
-    return BroadcastRecommendation(
-        min(threshold, cap_bytes), int(build), len(runs)
-    )
+    return BroadcastRecommendation(min(threshold, cap_bytes), build, len(history))
 
 
 def apply_broadcast_recommendation(
@@ -158,40 +162,28 @@ class SkewRecommendation:
 
 
 def detect_task_skew(
-    store: MetricsStore, ratio_threshold: float = SKEW_RATIO_THRESHOLD
+    history: list[list[StageInfo]], ratio_threshold: float = SKEW_RATIO_THRESHOLD
 ) -> "list[StageSkew]":
     """Per-stage straggler scan of the LAST recorded run: stages with
     ≥ SKEW_MIN_TASKS tasks whose max duration is ≥ ``ratio_threshold``
     × the median. Median over an even count takes the lower-middle
     element (exact, engine-portable)."""
-    runs = store.contiguous_runs()
-    if not runs:
+    if not history:
         return []
-    rows = (
-        store.task_metrics()
-        .where(F.col("run") == runs[-1])
-        .groupBy("stage_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.expr("percentile_approx(duration_ms, 0.5, 2147483647)").alias(
-                "med"
-            ),
-            F.max("duration_ms").alias("mx"),
-        )
-        .where(F.col("n") >= SKEW_MIN_TASKS)
-        .collect()
-    )
     out = []
-    for r in rows:
-        med = float(max(r.med, 1))
-        ratio = r.mx / med
+    for s in history[-1]:
+        d = sorted(s.task_durations_ms)
+        if len(d) < SKEW_MIN_TASKS:
+            continue
+        med = float(max(d[(len(d) - 1) // 2], 1))
+        ratio = d[-1] / med
         if ratio >= ratio_threshold:
-            out.append(StageSkew(r.stage_id, r.n, med, r.mx, round(ratio, 2)))
+            out.append(StageSkew(s.stage_id, len(d), med, d[-1], round(ratio, 2)))
     return sorted(out, key=lambda s: -s.ratio)
 
 
 def recommend_skew_mitigation(
-    store: MetricsStore, ratio_threshold: float = SKEW_RATIO_THRESHOLD
+    history: list[list[StageInfo]], ratio_threshold: float = SKEW_RATIO_THRESHOLD
 ) -> SkewRecommendation:
     """Evidence → conf: when the last run shows straggler stages,
     recommend AQE's runtime skew split with the split factor tied to
@@ -200,8 +192,7 @@ def recommend_skew_mitigation(
     compressed (every sibling task slows while the straggler hogs
     cores — measured ~2× compression at local[32]), so tests pass an
     explicit lower threshold; production keeps the default."""
-    runs = store.contiguous_runs()
-    skewed = detect_task_skew(store, ratio_threshold)
+    skewed = detect_task_skew(history, ratio_threshold)
     confs: dict = {}
     if skewed:
         factor = max(2, min(10, int(skewed[0].ratio // 2)))
@@ -210,7 +201,7 @@ def recommend_skew_mitigation(
             "spark.sql.adaptive.skewJoin.skewedPartitionFactor": str(factor),
         }
     return SkewRecommendation(
-        skewed=skewed, confs=confs, runs_considered=len(runs)
+        skewed=skewed, confs=confs, runs_considered=len(history)
     )
 
 
@@ -221,9 +212,7 @@ def apply_skew_recommendation(
         spark.conf.set(k, v)
 
 
-def record_run(
-    store: MetricsStore, run_id: int, since_stage_id: int | None = None
-) -> bool:
+def record_run(store: MetricsStore, run_id: int, since_stage_id: int) -> bool:
     """Post-job flight-record: pull this app's stage/task metrics over
     REST and persist them as ``run=run_id``. Returns False (with a
     warning) when nothing could be recorded.
@@ -232,32 +221,12 @@ def record_run(
     stage list is cumulative for the app, and without a watermark every
     run would re-record its predecessors' stages (per-run disjointness
     is what the reference got from fresh flight-recorder instances per
-    run, Listener.scala:85-92). Callers on the tuned path pass the
-    stage-id snapshot taken right before the workload
-    (``collector.current_max_stage_id``) so only workload stages land
-    in the run.
-
-    When no snapshot is given, the watermark is the store's max
-    stage_id **for the current application only**: Spark stage ids
-    restart at 0 per app, so a store-wide max would filter out every
-    stage of a fresh app process (run history would freeze at run 0
-    across `python -m robin_sparkles_spark.app` invocations — the
-    reference's canonical lifecycle is one process per run).
+    run, Listener.scala:85-92). The watermark is the stage-id snapshot
+    taken in THIS application right before the workload
+    (``collector.current_max_stage_id``), so only workload stages land
+    in the run; stage ids restart at 0 per app, so no watermark is ever
+    derived from stored stage ids of other applications.
     """
-    from pyspark.sql import functions as F
-
-    if since_stage_id is None:
-        since_stage_id = -1
-        existing = store.stage_metrics()
-        app_id = store.spark.sparkContext.applicationId
-        if "app_id" in existing.columns and not existing.isEmpty():
-            row = (
-                existing.where(F.col("app_id") == app_id)
-                .agg(F.max("stage_id"))
-                .collect()[0]
-            )
-            if row[0] is not None:
-                since_stage_id = row[0]
     collected = collect_app_metrics(store.spark, since_stage_id=since_stage_id)
     if collected is None:
         return False
@@ -284,12 +253,14 @@ def auto_tune(spark: SparkSession, store: MetricsStore) -> TuneReport:
     three knobs: shuffle width (H8), broadcast threshold (smallest
     scanned-then-exchanged stage), and AQE skew split (straggler
     ratio). Each knob independently no-ops when its evidence is
-    absent, so calling this before run 0 only applies H8's floor."""
-    rec = recommend_partitions(store)
+    absent, so calling this before run 0 only applies H8's floor. The
+    store is read once; every knob is a function of that history."""
+    history = store.run_history()
+    rec = partitions_from_history(history, ConfView.from_spark(spark))
     apply_recommendation(spark, rec)
-    b = recommend_broadcast_threshold(store)
+    b = recommend_broadcast_threshold(history)
     apply_broadcast_recommendation(spark, b)
-    s = recommend_skew_mitigation(store)
+    s = recommend_skew_mitigation(history)
     apply_skew_recommendation(spark, s)
     return TuneReport(partitions=rec, broadcast=b, skew=s)
 
@@ -303,8 +274,9 @@ def tuned_run(spark: SparkSession, metrics_root: str, app_name: str, job) -> Rec
     rec = recommend_partitions(store)
     apply_recommendation(spark, rec)
     # Open the recording window AFTER the tuner's own bookkeeping jobs
-    # (store reads/joins above) and immediately before the workload, so
-    # the recorded run contains exactly the workload's stages.
+    # (the store read above) and immediately before the workload, so
+    # the recorded run contains exactly the workload's stages — J2's
+    # positional alignment across runs depends on it.
     since = current_max_stage_id(spark)
     job(spark)
     if not record_run(store, rec.next_run_id, since_stage_id=since):

@@ -42,9 +42,8 @@ def test_counting_app_two_runs(spark, tmp_path):
         )
         assert counts2 == counts
         store = MetricsStore(spark, metrics, "my_awesome_app")
-        runs = store.contiguous_runs()
         # with a live REST UI both runs recorded; headless → none
-        assert runs in ([], [0], [0, 1])
+        assert len(store.run_history()) in (0, 1, 2)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
 
@@ -85,7 +84,7 @@ run_counting_app(spark, {str(corpus)!r}, {str(tmp_path / "out")!r}, {str(tmp_pat
 store = MetricsStore(spark, {str(tmp_path / "metrics")!r}, APP_NAME)
 stage_rows = store.stage_metrics().collect()
 print("RESULT:" + json.dumps({{
-    "runs": store.contiguous_runs(),
+    "runs": list(range(len(store.run_history()))),
     "n_stages": len(stage_rows),
     "any_shuffle_write": any(r.shuffle_bytes_written > 0 for r in stage_rows),
     "any_cpu": any(r.executor_cpu_time_ms > 0 for r in stage_rows),
@@ -138,7 +137,8 @@ def test_tuner_three_run_trajectory(spark, tmp_path, sf_dir):
         spark.conf.set("spark.sql.shuffle.partitions", before)
 
     store = MetricsStore(spark, metrics, "trajectory_app")
-    assert store.contiguous_runs() == [0, 1, 2]
+    history = store.run_history()
+    assert len(history) == 3
     assert [r.next_run_id for r in recs] == [0, 1, 2]
     assert [r.runs_considered for r in recs] == [0, 1, 2]
     assert all(r.partitions >= 1 for r in recs)
@@ -158,8 +158,6 @@ def test_tuner_three_run_trajectory(spark, tmp_path, sf_dir):
     assert bounds[0][1] < bounds[1][0] < bounds[1][1] < bounds[2][0]
 
     # each recorded run contains the workload's shuffle (groupBy) stage
-    history = store.run_history()
-    assert len(history) == 3
     for run_stages in history:
         assert any(s.shuffle.bytes_written > 0 for s in run_stages)
 
@@ -213,8 +211,8 @@ def test_tuner_loop_on_declared_q18(spark, tmp_path, sf_dir):
     assert applied == [r.partitions for r in recs], (applied, recs)
 
     store = MetricsStore(spark, metrics, "q18_tuner_app")
-    assert store.contiguous_runs() == [0, 1, 2]
     history = store.run_history()
+    assert len(history) == 3
 
     # H8 additive growth computed from run 0's live-recorded Q18
     # metrics: the run-1 width GREW past run 0's observed width, so the
@@ -261,12 +259,7 @@ def test_broadcast_threshold_record_recommend_rerun(spark, tmp_path, sf_dir):
         )
 
     def shuffle_written(run_id):
-        return (
-            store.stage_summary()
-            .where(F.col("run") == run_id)
-            .agg(F.sum("shuffle_bytes_written"))
-            .collect()[0][0]
-        )
+        return sum(s.shuffle.bytes_written for s in store.run_history()[run_id])
 
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -277,7 +270,7 @@ def test_broadcast_threshold_record_recommend_rerun(spark, tmp_path, sf_dir):
         df0.collect()
         assert record_run(store, 0, since_stage_id=since)
 
-        rec = recommend_broadcast_threshold(store)
+        rec = recommend_broadcast_threshold(store.run_history())
         assert rec.runs_considered == 1
         # the observed build side is the supplier scan: positive, small
         supp_bytes = __import__("os").path.getsize(
@@ -311,7 +304,7 @@ def test_broadcast_threshold_record_recommend_rerun(spark, tmp_path, sf_dir):
 
         # no-history store → no recommendation, conf untouched
         empty = MetricsStore(spark, str(tmp_path / "empty"), "none_app")
-        none_rec = recommend_broadcast_threshold(empty)
+        none_rec = recommend_broadcast_threshold(empty.run_history())
         assert none_rec.threshold_bytes == -1
         marker = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         apply_broadcast_recommendation(spark, none_rec)
@@ -354,13 +347,13 @@ def test_broadcast_recommendation_selection_and_cap(spark, tmp_path):
         ],
         tasks([0, 1, 2], 0),
     )
-    rec = recommend_broadcast_threshold(store)
+    rec = recommend_broadcast_threshold(store.run_history())
     assert rec.build_side_bytes == 2048
     assert rec.threshold_bytes == 8192  # next_pow2(4 × 2048)
 
     # only the LAST run counts; an oversized build side → no rec
     store.write_run(1, [stage(0, 600 << 20, 10 << 20)], tasks([0], 1))
-    rec = recommend_broadcast_threshold(store)
+    rec = recommend_broadcast_threshold(store.run_history())
     assert rec.threshold_bytes == -1
     assert rec.build_side_bytes == 600 << 20
     assert BROADCAST_CAP_BYTES == 512 << 20
@@ -427,12 +420,12 @@ def test_skew_detection_record_detect_mitigate(spark, tmp_path):
         spark.conf.set("spark.sql.shuffle.partitions", "8")
 
         run_and_record(fact.join(dim, "k"), 0)
-        skewed = detect_task_skew(store, ratio_threshold=3.0)
+        skewed = detect_task_skew(store.run_history(), ratio_threshold=3.0)
         assert skewed, "hot-key join stage not flagged"
         worst_unsalted = skewed[0].ratio
         assert skewed[0].n_tasks == 8
 
-        rec = recommend_skew_mitigation(store, ratio_threshold=3.0)
+        rec = recommend_skew_mitigation(store.run_history(), ratio_threshold=3.0)
         assert rec.confs["spark.sql.adaptive.skewJoin.enabled"] == "true"
         factor = int(
             rec.confs["spark.sql.adaptive.skewJoin.skewedPartitionFactor"]
@@ -446,13 +439,13 @@ def test_skew_detection_record_detect_mitigate(spark, tmp_path):
 
         # the salted twin spreads the hot key across all reducers
         run_and_record(salted_join(fact, dim, ["k"], n_salts=64), 1)
-        salted_skew = detect_task_skew(store, ratio_threshold=1.0)
+        salted_skew = detect_task_skew(store.run_history(), ratio_threshold=1.0)
         worst_salted = salted_skew[0].ratio if salted_skew else 1.0
         assert worst_salted < worst_unsalted, (worst_salted, worst_unsalted)
 
         # empty recommendation = no conf churn
         empty = MetricsStore(spark, str(tmp_path / "none"), "none_app")
-        none_rec = recommend_skew_mitigation(empty)
+        none_rec = recommend_skew_mitigation(empty.run_history())
         assert none_rec.confs == {} and none_rec.skewed == []
         marker = spark.conf.get(
             "spark.sql.adaptive.skewJoin.skewedPartitionFactor"

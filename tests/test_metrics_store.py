@@ -8,7 +8,7 @@ import pytest
 from robin_sparkles_spark.metrics.store import MetricsStore
 from robin_sparkles_spark.tuner.heuristics import ConfView, ComputePartitions, stages_with_most_expensive_shuffle
 from robin_sparkles_spark.tuner.recommend import (
-    apply_recommendation,
+    auto_tune,
     recommend_partitions,
     record_run,
     tuned_run,
@@ -53,26 +53,26 @@ def test_roundtrip_and_summary(store):
     store.write_run(0, *synthetic_run(0, n_tasks=8, cpu_ms=105))
     store.write_run(1, *synthetic_run(1, n_tasks=11, cpu_ms=90))
 
-    assert store.contiguous_runs() == [0, 1]
-    summary = store.stage_summary().orderBy("run", "stage_id").collect()
-    assert len(summary) == 6
-    s = next(r for r in summary if r.run == 0 and r.stage_id == 1)
+    history = store.run_history()
+    assert [[s.stage_id for s in run] for run in history] == [[0, 1, 2]] * 2
+    s = history[0][1]
     assert s.num_partitions_used == 8
     assert s.total_task_time_ms == 80
-    assert s.num_executors == 3          # countDistinct over {1,2,3}
+    assert s.num_executors == 3          # distinct executors {1,2,3}
     assert s.total_input_size_mb == 512.0
+    assert s.shuffle.bytes_written == 10_000_000
 
 
 def test_gap_truncates_history(store):
     store.write_run(0, *synthetic_run(0, 8, 105))
     store.write_run(1, *synthetic_run(1, 11, 90))
     store.write_run(3, *synthetic_run(3, 17, 60))  # run 2 missing
-    assert store.contiguous_runs() == [0, 1]
-    assert len(store.run_history()) == 2
+    history = store.run_history()
+    assert len(history) == 2
+    assert [s.num_partitions_used for s in history[-1]] == [4, 11, 4]
 
 
 def test_empty_store(store):
-    assert store.contiguous_runs() == []
     assert store.run_history() == []
     rec = recommend_partitions(store, ConfView({"spark.executor.cores": "4"}, env={}))
     assert rec.partitions == 4  # H8 zero-run branch via conf defaults
@@ -110,10 +110,11 @@ def test_stage_without_tasks_dropped(store):
         }
     )
     store.write_run(0, stage_rows, task_rows)
-    # inner join drops the taskless stage (reference would crash the
-    # entire run load — documented divergence, store.py docstring)
-    assert store.stage_summary().where("stage_id = 9").count() == 0
-    assert store.stage_summary().count() == 3
+    # the stage↔task join drops the taskless stage (reference would
+    # crash the entire run load — documented divergence, store.py
+    # docstring)
+    (run0,) = store.run_history()
+    assert [s.stage_id for s in run0] == [0, 1, 2]
 
 
 def test_live_collector_end_to_end(spark, tmp_path):
@@ -156,14 +157,12 @@ def test_tuned_run_lifecycle(spark, tmp_path):
         rec2 = tuned_run(spark, str(tmp_path), "tuned_app", job)
         assert len(calls) == 3
         store = MetricsStore(spark, str(tmp_path), "tuned_app")
-        runs = store.contiguous_runs()
-        if not runs:  # headless: REST UI unavailable
+        history = store.run_history()
+        if not history:  # headless: REST UI unavailable
             return
-        assert runs == list(range(len(runs)))
         assert rec1.runs_considered >= 1
         assert rec2.runs_considered >= rec1.runs_considered
 
-        history = store.run_history()
         # Per-job recording window ⇒ runs are positionally comparable:
         # the same job records the same stage count every time (the
         # old store-wide watermark let tuner bookkeeping stages leak
@@ -186,10 +185,15 @@ def test_tuned_run_lifecycle(spark, tmp_path):
 
 def test_record_run_ignores_foreign_app_watermark(spark, tmp_path):
     """Stage ids restart at 0 per Spark application, so the recording
-    watermark must only consider rows from the CURRENT app. A store
+    watermark is a snapshot of the CURRENT app's stage ids. A store
     carrying a previous process's high stage ids must not filter out a
     fresh app's low ones (the frozen-history bug: record_run would
     silently return False forever)."""
+    from robin_sparkles_spark.metrics.collector import (
+        collect_app_metrics,
+        current_max_stage_id,
+    )
+
     store = MetricsStore(spark, str(tmp_path), "restart_app")
     stage_rows, task_rows = synthetic_run(0, 8, 100)
     for r in stage_rows:
@@ -199,16 +203,53 @@ def test_record_run_ignores_foreign_app_watermark(spark, tmp_path):
         r["stage_id"] += 5_000_000
     store.write_run(0, stage_rows, task_rows)
 
+    since = current_max_stage_id(spark)
     spark.range(50_000).selectExpr("id % 3 AS k").groupBy("k").count().collect()
-    recorded = record_run(store, 1)
-    from robin_sparkles_spark.metrics.collector import collect_app_metrics
-
+    recorded = record_run(store, 1, since)
     if collect_app_metrics(spark) is None:
         pytest.skip("driver REST UI unavailable in this environment")
     # with a live UI the fresh app's stages must be recorded despite the
     # foreign high-water mark
     assert recorded is True
-    assert 1 in store.available_runs()
+    assert len(store.run_history()) == 2
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, counted through a job group."""
+    import uuid
+
+    from robin_sparkles_spark.metrics.collector import _drain_listener_bus
+
+    sc = spark.sparkContext
+    group = f"job_count_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count probe")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    _drain_listener_bus(spark, timeout=10.0)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_tuner_reads_history_in_two_jobs(spark, store):
+    """The tuner's own cost stays small next to the job it tunes: the
+    store is scanned once per table (fixed schemas, no inference job)
+    and every knob is computed from that one history on the driver."""
+    for run, (n_tasks, cpu_ms) in enumerate([(8, 105), (11, 90), (14, 80)]):
+        store.write_run(run, *synthetic_run(run, n_tasks, cpu_ms))
+    confs = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.skewJoin.enabled",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
+    )
+    before = {k: spark.conf.get(k) for k in confs}
+    try:
+        assert _jobs_launched(spark, lambda: recommend_partitions(store)) <= 2
+        assert _jobs_launched(spark, lambda: auto_tune(spark, store)) <= 2
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
 
 
 class _HeadlessSC:

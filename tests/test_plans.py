@@ -510,6 +510,26 @@ def test_staged_barrier_paths_are_app_unique_and_lazy_never_stages(
     assert lazy.count() == 10
 
 
+def test_barrier_skip_refuses_to_bypass_staging(spark, tmp_path, monkeypatch):
+    """Skipping a corpus barrier while SPARK_GRAFT_BARRIER_DIR asks for
+    it to be staged fails loudly, naming both variables; bounded
+    classes never stage, so skipping them stays a plain no-op."""
+    from robin_sparkles_spark.functions.barrier import barrier
+
+    stage = tmp_path / "barriers"
+    monkeypatch.setenv("SPARK_GRAFT_BARRIER_DIR", str(stage))
+    monkeypatch.setenv("SPARK_GRAFT_BARRIER_SKIP", "skip probe")
+    df = spark.range(10)
+
+    with pytest.raises(ValueError) as err:
+        barrier(df, "corpus", "skip probe corpus")
+    assert "SPARK_GRAFT_BARRIER_SKIP" in str(err.value)
+    assert "SPARK_GRAFT_BARRIER_DIR" in str(err.value)
+    assert not stage.exists()
+
+    assert barrier(df, "vocab", "skip probe vocab") is df
+
+
 def test_signature_barrier_survives(spark, sf_dir):
     """Regression guard for the per-pair recompute bug: the simhash
     pair scan's join predicate must reference plain attributes, i.e.

@@ -53,7 +53,7 @@ def test_salted_join_spreads_keys(spark):
 
 def test_streaming_metrics_ingest(spark, tmp_path):
     """Write runs into the store, stream them back, check the rolling
-    summary matches the batch stage_summary rollup."""
+    summary matches the per-run stage totals written."""
     store = MetricsStore(spark, str(tmp_path), "stream_app")
     store.write_run(0, *synthetic_run(0, n_tasks=8, cpu_ms=105))
     store.write_run(1, *synthetic_run(1, n_tasks=11, cpu_ms=90))

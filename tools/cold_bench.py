@@ -107,8 +107,8 @@ def main() -> int:
     out = {
         "tag": tag,
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
-        "aqe_min_partition": os.environ.get(
-            "SPARK_GRAFT_AQE_MIN_PARTITION", "48k(default)"
+        "aqe_min_partition": spark.conf.get(
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize"
         ),
         "barrier_skip": os.environ.get("SPARK_GRAFT_BARRIER_SKIP", ""),
         "reps": reps,
